@@ -42,11 +42,8 @@ BENCH_QUERIES = [
     "minhash_signatures_fast",
     "minhash_dedup_fast",
     "cosine_topk",
-    "cosine_topk_vectorized",
     "lsh_ann_topk",
-    "lsh_ann_topk_hof",
     "ivf_ann_topk",
-    "ivf_ann_topk_hof",
     "embedding_near_dup",
     "embedding_near_dup_vectorized",
     "multimodal_meta",

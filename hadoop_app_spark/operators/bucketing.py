@@ -140,6 +140,10 @@ def compact_bucketed_table(spark: SparkSession, table: str) -> dict:
             return -1
 
     n_buckets, bcols, scols, provider = _bucket_meta(spark, table)
+    # files appended through another session (a streaming sink's) are
+    # missing from this session's cached listing; the rewrite below
+    # would drop them with the old location, so list afresh
+    spark.catalog.refreshTable(table)
     files_before = _files(_table_location(spark, table))
     staging = f"{table}__compacting"
     spark.sql(f"DROP TABLE IF EXISTS {staging}")

@@ -23,7 +23,7 @@ Spark-first shape:
 - ADC top-k broadcasts the per-query lookup tables (m x n_codes
   doubles — tiny regardless of corpus) and scores codes with numpy
   fancy-indexing; a map-side partial top-k bounds the exchange to
-  n_partitions x |queries| x k rows (the brute_force_topk_vectorized
+  n_partitions x |queries| x k rows (the lsh_topk_vectorized
   plan shape).
 
 Determinism: the sample is hash-ordered, seeding/Lloyd are plain

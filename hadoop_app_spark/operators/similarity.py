@@ -12,9 +12,11 @@ Beyond-reference surface (north star):
   deterministic (fixed seed) so results are reproducible run-to-run.
 
 Vector math stays in Catalyst higher-order functions (zip_with /
-aggregate, see functions.vectors). For 1000-dim embeddings at real
-scale, swap the scoring kernel for a Pandas UDF over Arrow batches
-(numpy matmul) — same plan shape, faster inner loop.
+aggregate, see functions.vectors). brute_force_topk has no numpy twin:
+at dim=64, the only width in use, its JVM fold beats a numpy kernel
+that pays Arrow transfer. lsh_topk, ivf_topk and embedding_near_dups
+have numpy twins (the ``_vectorized`` functions) that measured faster
+at dim=64; the HOF forms are their pytest references.
 
 Background (public literature, see PAPERS.md): distributed top-k
 similarity with local index structures per partition (REPOSE, ICDE
@@ -54,65 +56,6 @@ def brute_force_topk(
         cosine_similarity(vec_col, "query_vec").alias("cosine"),
     )
     return _rank_topk(scored, id_col, k)
-
-
-def brute_force_topk_vectorized(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """Vectorized twin of brute_force_topk — the high-dimension scale
-    path promised in the module docstring.
-
-    Kernel: one numpy matmul per Arrow batch against the broadcast
-    (normalized) query matrix, with a map-side partial top-k — each
-    task emits only k candidates per query, so the final exchange
-    carries n_partitions x m x k rows regardless of corpus size. At
-    1000-dim embeddings this beats the interpreted HOF fold by the
-    BLAS-vs-interpreter gap while keeping the identical plan shape
-    (scan -> per-partition score -> tiny global top-k).
-
-    Cosines come from a different accumulation order than the HOF
-    kernel (pairwise/SIMD vs left fold), so last-ulp values can differ
-    — results are rank-identical except on sub-ulp near-ties; this
-    variant is therefore bench/pipeline surface, not oracle surface.
-    """
-    import numpy as np
-    import pandas as pd
-
-    qrows = queries.select("query_id", "query_vec").collect()
-    if not qrows:
-        raise ValueError("empty queries")
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    Qn = _np_normalize(Q)
-    bq = corpus.sparkSession.sparkContext.broadcast((qids, Qn))
-    out_schema = f"query_id long, {id_col} long, cosine double"
-
-    def score(batches):
-        bqids, bQn = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            Xn = _np_normalize(X)
-            C = Xn @ bQn.T  # (batch, m)
-            ids = pdf[id_col].to_numpy()
-            parts = []
-            for j, qid in enumerate(bqids):
-                col = C[:, j]
-                mask = ids != qid
-                cids, cval = ids[mask], col[mask]
-                if cids.size == 0:
-                    continue
-                parts.append(_partial_topk_frame(qid, cids, cval, k, id_col))
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
-    cand = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
-    return _rank_topk(cand, id_col, k)
 
 
 def _np_normalize(X):
@@ -256,7 +199,7 @@ def lsh_topk_vectorized(
     per-row interpreted expression tree). Exchange carries at most
     partitions x m x k rows. Cosines come from BLAS accumulation, so
     last-ulp values can differ from the HOF fold — rank parity is the
-    pytest contract, oracle surface stays on the HOF form.
+    pytest contract, and the HOF form is the pytest reference.
 
     ``n_tables`` OR-amplifies exactly like lsh_topk: a corpus vector is
     a candidate for query j when any table's buckets agree. Here it is
@@ -520,8 +463,8 @@ def ivf_topk_vectorized(
     mapInPandas pass (argmax over a batch x centroids matmul, then a
     masked cosine matmul per query) with map-side partial top-k — no
     corpus shuffle, no interpreted per-row expression tree. Rank parity
-    with the HOF form pinned in pytest; the HOF form stays the oracle
-    surface.
+    with the HOF form pinned in pytest; the HOF form is the pytest
+    reference.
     """
     import numpy as np
 

@@ -8,8 +8,10 @@ w + k - 1 normalized characters (the winnowing guarantee), so it
 finds copied PASSAGES between documents that differ everywhere else,
 with a selection density of ~2/(w+1) instead of every k-gram.
 
-Algorithm per document (pure Catalyst HOFs, zero Python, zero
-shuffle until the candidate join):
+Algorithm per document (zero shuffle until the candidate join;
+winnow_fingerprints states it in pure Catalyst HOFs and is the pytest
+reference for the numpy kernel winnow_fingerprints_vectorized, which
+winnow_neardup_pairs runs):
 1. normalize: lowercase, drop every non-[a-z0-9] char (MOSS-style —
    whitespace/punctuation/case edits don't move fingerprints);
 2. hash all k-grams with the same 31-poly mod-1e9+7 rolling fold the
@@ -225,24 +227,15 @@ def winnow_neardup_pairs(
     w: int = 4,
     max_df: int = 16,
     min_shared: int = 2,
-    impl: str = "vectorized",
     repartition_to: int | None = None,
 ) -> DataFrame:
     """End-to-end: fingerprint then overlap (see the two stages).
 
-    ``impl='vectorized'`` (default — the production path) and
-    ``impl='hof'`` (pure-Catalyst, the expression-level reference)
-    produce IDENTICAL rows; both are checked against the same oracle.
-    ``repartition_to`` spreads the vectorized kernel off a small
-    single-file scan (ignored by the hof path, whose cost is in the
-    codegen'd expressions that parallelize with the scan anyway).
+    Fingerprints come from the vectorized kernel; the pure-Catalyst
+    :func:`winnow_fingerprints` is its bit-identical pytest reference.
+    ``repartition_to`` spreads the kernel off a small single-file scan.
     """
-    if impl == "vectorized":
-        fps = winnow_fingerprints_vectorized(
-            df, text_col, id_col, k, w, repartition_to=repartition_to
-        )
-    elif impl == "hof":
-        fps = winnow_fingerprints(df, text_col, id_col, k, w)
-    else:
-        raise ValueError(f"impl must be 'vectorized' or 'hof', got {impl!r}")
+    fps = winnow_fingerprints_vectorized(
+        df, text_col, id_col, k, w, repartition_to=repartition_to
+    )
     return winnow_overlap(fps, id_col, max_df=max_df, min_shared=min_shared)

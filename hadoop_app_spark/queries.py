@@ -43,7 +43,7 @@ from hadoop_app_spark.functions.text import (
 )
 from hadoop_app_spark.operators.dedup import minhash_signatures, simhash
 from hadoop_app_spark.operators.joins import anti_join, semi_join
-from hadoop_app_spark.operators.similarity import brute_force_topk, lsh_topk
+from hadoop_app_spark.operators.similarity import brute_force_topk
 from hadoop_app_spark.operators.topk import global_top_k, top_k_per_group
 
 
@@ -3790,8 +3790,7 @@ def q_ngram_jaccard_adjacent(spark, sf_dir):
         SELECT query_id, vec_id, rank FROM ranked WHERE rank <= 5
     """,
     doc="brute-force cosine top-k ANN baseline (north star: similarity search). "
-    "Catalyst HOF kernel — at dim=64 the JVM fold beats Arrow transfer; "
-    "cosine_topk_vectorized is the high-dimension scale path (same oracle). "
+    "Catalyst HOF kernel — at dim=64 the JVM fold beats Arrow transfer. "
     "Oracle compares rank sets; cosine floats stay engine-side.",
 )
 def q_cosine_topk(spark, sf_dir):
@@ -3846,7 +3845,7 @@ def _lsh_ann_topk_oracle(dim: int = 64, n_planes: int = 6, k: int = 5) -> str:
     "lsh_ann_topk",
     oracle=_lsh_ann_topk_oracle(),
     doc="sign-LSH bucketed approximate top-k (north star: ANN scale path), "
-    "vectorized numpy kernel (lsh_ann_topk_hof is the Catalyst twin); oracle "
+    "vectorized numpy kernel (the Catalyst lsh_topk is its pytest reference); oracle "
     "inlines the deterministic hyperplanes so DuckDB reproduces the exact buckets",
 )
 def q_lsh_ann_topk(spark, sf_dir):
@@ -5549,42 +5548,6 @@ def q_minhash_dedup_fast(spark, sf_dir):
 
 
 @query(
-    "lsh_ann_topk_hof",
-    oracle=_lsh_ann_topk_oracle(),
-    doc="sign-LSH ANN top-k, Catalyst higher-order-function kernel (zip_with/"
-    "aggregate fold) — same hyperplanes, buckets and ranking as the vectorized "
-    "primary; both forms run the same inlined-hyperplane oracle",
-)
-def q_lsh_ann_topk_hof(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") <= 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.repartition(spark.sparkContext.defaultParallelism)
-    return lsh_topk(corpus, queries, dim=64, k=5, n_planes=6).select("query_id", "vec_id", "rank")
-
-
-@query(
-    "ivf_ann_topk_hof",
-    oracle=None,  # assigned below once _IVF_ORACLE is defined
-    doc="IVF ANN top-k, Catalyst higher-order-function kernel — same centroids, "
-    "first-argmax cell assignment and probe order as the vectorized primary; "
-    "both forms run the same oracle",
-)
-def q_ivf_ann_topk_hof(spark, sf_dir):
-    from hadoop_app_spark.operators.similarity import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") <= 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.repartition(spark.sparkContext.defaultParallelism)
-    return ivf_topk(
-        corpus, queries, k=5, n_centroids=16, n_probe=4, centroid_source=emb
-    ).select("query_id", "vec_id", "rank")
-
-
-@query(
     "embedding_near_dup_vectorized",
     oracle=None,  # assigned below once _lsh_near_dup_oracle is defined
     doc="embedding near-dup pairs, numpy kernel: sign-matmul bucketing, one shuffle "
@@ -5701,7 +5664,7 @@ _IVF_ORACLE = f"""
     oracle=_IVF_ORACLE,
     doc="IVF-style ANN: per-batch argmax cell assignment (no shuffle), n_probe=4 of 16 "
     "cells probed per query (north star: ANN scale path beside sign-LSH), vectorized "
-    "numpy kernel (ivf_ann_topk_hof is the Catalyst twin)",
+    "numpy kernel (the Catalyst ivf_topk is its pytest reference)",
 )
 def q_ivf_ann_topk(spark, sf_dir):
     from hadoop_app_spark.operators.similarity import ivf_topk_vectorized
@@ -5744,11 +5707,6 @@ def q_pq_ann_topk(spark, sf_dir):
     return pq_adc_topk(corpus, queries, books, k=5, shortlist=64).select(
         "query_id", "vec_id", "rank"
     )
-
-
-REGISTRY["ivf_ann_topk_hof"] = QueryDef(
-    REGISTRY["ivf_ann_topk_hof"].fn, _IVF_ORACLE, REGISTRY["ivf_ann_topk_hof"].doc
-)
 
 
 @query(
@@ -8058,30 +8016,6 @@ def q_stream_sliding_exec(spark, sf_dir):
         "n",
     )
 
-
-@query(
-    "cosine_topk_vectorized",
-    oracle=None,  # assigned below: shares cosine_topk's rank-set oracle
-    doc="brute-force cosine top-k, numpy matmul per Arrow batch + map-side partial "
-    "top-k — the high-dimension scale path (plan shape identical to cosine_topk, "
-    "same rank-set oracle; at dim=64 the HOF primary wins on Arrow transfer)",
-)
-def q_cosine_topk_vectorized(spark, sf_dir):
-    from hadoop_app_spark.operators.similarity import brute_force_topk_vectorized
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") <= 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.repartition(spark.sparkContext.defaultParallelism)
-    return brute_force_topk_vectorized(corpus, queries, k=5).select("query_id", "vec_id", "rank")
-
-
-REGISTRY["cosine_topk_vectorized"] = QueryDef(
-    REGISTRY["cosine_topk_vectorized"].fn,
-    REGISTRY["cosine_topk"].oracle,
-    REGISTRY["cosine_topk_vectorized"].doc,
-)
 
 # streaming top-k: the mergeability theorem makes the batch brute-force
 # oracle the ground truth for the streamed fold, verbatim
@@ -11728,29 +11662,7 @@ def q_winnow_neardup(spark, sf_dir):
     # otherwise pin the whole per-doc fingerprint pass to a few cores)
     return winnow_neardup_pairs(
         d, "text", "doc_id", k=8, w=4, max_df=16, min_shared=2,
-        impl="vectorized", repartition_to=spark.sparkContext.defaultParallelism,
-    )
-
-
-@query(
-    "winnow_neardup_hof",
-    # SAME oracle as winnow_neardup: unlike the minhash twins, the poly
-    # fold is exact int64 arithmetic in both paths, so the vectorized
-    # kernel and the HOF chain produce identical rows (equality pinned
-    # in tests/test_winnow.py)
-    oracle=REGISTRY["winnow_neardup"].oracle,
-    doc="winnowing near-dup pairs, pure-Catalyst reference path: the same "
-    "selection as winnow_neardup via HOF lambdas (aggregate/slice/reverse) — "
-    "the expression-level form the oracle mirrors term-for-term; ~8·len "
-    "interpreted lambda steps per row make the vectorized kernel the "
-    "production path (operators/winnow.winnow_neardup_pairs impl='hof')",
-)
-def q_winnow_neardup_hof(spark, sf_dir):
-    from hadoop_app_spark.operators.winnow import winnow_neardup_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    return winnow_neardup_pairs(
-        d, "text", "doc_id", k=8, w=4, max_df=16, min_shared=2, impl="hof"
+        repartition_to=spark.sparkContext.defaultParallelism,
     )
 
 
@@ -13134,9 +13046,6 @@ _PRIORITY = [
     "source_stats",
     "decontamination",
     "domain_filter_caps",
-    # winnow_neardup_hof: pure-Catalyst reference path, bit-identical to
-    # the now-gated winnow_neardup and sharing its oracle
-    "winnow_neardup_hof",
     # sample_per_group: fixed-k twin of the gated-via-corpus_curation
     # fp-mod sampling mechanism; the WindowGroupLimit cap is gated via
     # topk_per_group — oracle-checked locally
@@ -13280,9 +13189,6 @@ _PRIORITY = [
     "stratified_sample",
     "sliding_window",
     "event_dedup",
-    "cosine_topk_vectorized",
-    "lsh_ann_topk_hof",
-    "ivf_ann_topk_hof",
     "embedding_near_dup_vectorized",
     "minhash_signatures_fast",
     "minhash_dedup_fast",

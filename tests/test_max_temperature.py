@@ -4,6 +4,8 @@ MRUnit cases (TemperatureTest.java:19-30) and the input/micro dataset
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import Row
 
 from hadoop_app_spark.plans.max_temperature import max_temperature, run_max_temperature
@@ -11,7 +13,10 @@ from hadoop_app_spark.sources.ncdc import read_ncdc
 
 from tests.conftest import rows_set
 
-MICRO = "/root/reference/input/micro"
+# input/micro rebuilt from the documented fixed-width layout (SURVEY §5):
+# NCDC_LINE with year 1950-1953 at [15:19] and temp -11..-14 at [87:92],
+# four lines, no trailing newline
+MICRO = str(Path(__file__).resolve().parent / "fixtures" / "ncdc_micro")
 
 # the canonical MRUnit mapper input line (TemperatureTest.java:20-21)
 NCDC_LINE = (

@@ -622,20 +622,6 @@ def test_compact_parquet(spark, tmp_path):
     assert got == list(range(10000))
 
 
-def test_vectorized_topk_matches_hof_kernel(spark, emb_df):
-    from hadoop_app_spark.operators.similarity import brute_force_topk_vectorized
-
-    queries = emb_df.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    hof = {(r.query_id, r.vec_id, r.rank) for r in brute_force_topk(emb_df, queries, k=3).collect()}
-    vec = {
-        (r.query_id, r.vec_id, r.rank)
-        for r in brute_force_topk_vectorized(emb_df, queries, k=3).collect()
-    }
-    assert vec == hof
-
-
 def test_connected_components_chain_and_star(spark):
     from hadoop_app_spark.operators.graph import connected_components, dedup_by_components
 
@@ -2506,6 +2492,27 @@ def test_compact_bucketed_table_defragments_and_preserves_colocation(spark):
         spark.sql("DROP TABLE IF EXISTS bkt_compact")
         spark.sql("DROP TABLE IF EXISTS bkt_compact_r")
         spark.sql("DROP TABLE IF EXISTS bkt_compact__compacting")
+
+
+def test_compact_bucketed_table_keeps_rows_appended_by_another_session(spark):
+    """Rows a second session appends (a streaming sink's own session)
+    are not in this session's cached file listing; compaction must
+    still rewrite them instead of dropping them with the old files."""
+    from hadoop_app_spark.operators.bucketing import compact_bucketed_table, write_bucketed
+
+    write_bucketed(spark.range(0, 100).selectExpr("id AS k", "id * 2 AS v"), "bkt_xsess", ["k"], 4)
+    try:
+        assert spark.table("bkt_xsess").count() == 100  # caches the listing
+        other = spark.newSession()
+        other.range(100, 160).selectExpr("id AS k", "id * 2 AS v").write.mode(
+            "append"
+        ).format("parquet").bucketBy(4, "k").sortBy("k").saveAsTable("bkt_xsess")
+        compact_bucketed_table(spark, "bkt_xsess")
+        got = sorted(map(tuple, spark.table("bkt_xsess").collect()))
+        assert got == [(k, 2 * k) for k in range(160)]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS bkt_xsess")
+        spark.sql("DROP TABLE IF EXISTS bkt_xsess__compacting")
 
 
 def test_compact_bucketed_index_keeps_dedup_semantics(spark, tmp_path):

@@ -19,6 +19,8 @@ from pyspark.sql.datasource import (
 from hadoop_app_spark.sources.ncdc import read_ncdc
 from hadoop_app_spark.sources.pyds import ByteRange, NcdcReader, read_ncdc_py
 
+MICRO = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "ncdc_micro")
+
 TEMPLATE = (
     "0043011990999991950051518004+68750+023550FM-12+038299999V0203201N0026"
     "1220001CN9999999N9-00111+99999999999"
@@ -58,10 +60,11 @@ def test_parity_with_substring_path(spark, uniform_dir):
 
 
 def test_reference_micro_golden(spark):
-    # the reference's own sample input: no trailing newline -> the
-    # stride check falls back to one partition; values match the
-    # MaxTemperature golden (year -> temp used by run_max_temperature)
-    df = read_ncdc_py(spark, "/root/reference/input/micro")
+    # the reference's sample input (rebuilt in tests/fixtures): no
+    # trailing newline -> the stride check falls back to one partition;
+    # values match the MaxTemperature golden (year -> temp used by
+    # run_max_temperature)
+    df = read_ncdc_py(spark, MICRO)
     got = {r.year: r.temp for r in df.collect()}
     assert got == {1950: -11, 1951: -12, 1952: -13, 1953: -14}
 
